@@ -100,7 +100,7 @@ _ALL = _ordered({**REGISTRY, **TRAINING_REGISTRY, **ENTRY_REGISTRY})
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the extraction pipeline end-to-end on sf0.001 —
     derived transcripts -> salted repartition -> sortWithinPartitions ->
-    Arrow-batched mapInPandas extraction."""
+    Arrow-batched mapInArrow extraction."""
     from unraveldocs_spark.entry_queries import q_extract_turns
 
     return q_extract_turns(spark, "/root/testdata/sf0.001")

@@ -26,7 +26,10 @@ def main():
     ap.add_argument("--lineage-table", default=None, help="iceberg lineage table (with --iceberg)")
     ap.add_argument("--iceberg", action="store_true", help="treat --input/--store as iceberg tables")
     ap.add_argument("--partitions", type=int, default=None)
-    ap.add_argument("--salt", type=int, default=16)
+    ap.add_argument(
+        "--salt", type=int, default=None,
+        help="salt count (default: max(16, 4 x partitions), see salted_repartition)",
+    )
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession

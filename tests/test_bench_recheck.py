@@ -190,3 +190,49 @@ class TestCompactContract:
             }
         )
         assert len(line) < 1800, len(line)
+
+
+class TestCompactBudget:
+    """_compact_verdicts spends INLINE_BUDGET_CHARS on the gravest
+    verdicts first: admission stops at the first entry that does not fit
+    (a short 'noise' must never be inlined while a 'regressed' one is
+    dropped), and the trailing _more entry counts against the budget."""
+
+    @staticmethod
+    def _ranked_names(detail):
+        order = {p: i for i, p in enumerate(br._VERDICT_PRIORITY)}
+        return sorted(detail, key=lambda n: (order[detail[n]["verdict"]], n))
+
+    def test_no_lower_verdict_after_a_drop(self):
+        detail = {
+            "r1_" + "a" * 60: {"verdict": "regressed"},
+            "r2_" + "b" * 60: {"verdict": "regressed"},
+            "n1": {"verdict": "noise"},
+        }
+        out = br._compact_verdicts(detail)
+        assert "r1_" + "a" * 60 in out
+        assert "n1" not in out
+        assert out["_more"] == "2 in BENCH/recheck json"
+        assert len(json.dumps(out)) <= br.INLINE_BUDGET_CHARS
+
+    def test_budget_holds_with_more_entry(self):
+        """Sweep name lengths so the last admitted entry lands at every
+        offset from the budget edge: the serialized dict, _more
+        included, never exceeds the budget, and the admitted names are
+        always a prefix of the priority order."""
+        for width in range(1, 80):
+            detail = {
+                f"q{i}_" + "x" * width: {"verdict": v}
+                for i, v in enumerate(
+                    ["regressed"] * 3 + ["noise-floor"] * 2 + ["noise"] * 3
+                )
+            }
+            out = br._compact_verdicts(detail)
+            assert len(json.dumps(out)) <= br.INLINE_BUDGET_CHARS, width
+            kept = [n for n in out if n != "_more"]
+            assert kept == self._ranked_names(detail)[: len(kept)], width
+            dropped = len(detail) - len(kept)
+            if dropped:
+                assert out["_more"] == f"{dropped} in BENCH/recheck json"
+            else:
+                assert "_more" not in out

@@ -235,10 +235,108 @@ class TestSkewBalance:
         assert max(u_sizes) > max(counts), "salting should beat conv-only partitioning"
 
 
+class TestSaltDefault:
+    def test_run_extraction_partitions_like_salted_repartition(
+        self, spark, smoke_sdf, tmp_path
+    ):
+        """run_extraction's default salt is salted_repartition's own
+        default, so the per-partition turn counts a run commits in its
+        lineage are exactly those of salted_repartition(df, n)."""
+        from pyspark.sql import functions as F
+
+        n = 8
+        store = DirCheckpointStore(str(tmp_path / "salt"))
+        run_extraction(spark, smoke_sdf, store=store, num_partitions=n)
+        got = {
+            r.partition_id: r.turns_processed
+            for r in store.lineage(spark).collect()
+        }
+        expected = {
+            r.p: r["count"]
+            for r in salted_repartition(smoke_sdf, n)
+            .groupBy(F.spark_partition_id().alias("p"))
+            .count()
+            .collect()
+        }
+        assert got == expected
+
+
+class TestDegenerateResume:
+    def _store_with(self, spark, tmp_path, name, n_convs=3):
+        from unraveldocs_spark.schemas import TRANSCRIPTS_SCHEMA
+
+        pdf = G.transcripts_pandas(n_convs, median_turns=5, hot_factor=2,
+                                   include_oversize=False)
+        sdf = spark.createDataFrame(pdf, schema=TRANSCRIPTS_SCHEMA)
+        store = DirCheckpointStore(str(tmp_path / name))
+        run_extraction(spark, sdf, store=store, num_partitions=4)
+        return pdf, sdf, store
+
+    def test_empty_input_against_nonempty_store(self, spark, tmp_path):
+        """An empty batch resumes to nothing and commits no snapshot."""
+        from unraveldocs_spark.checkpoint import resume_filter
+        from unraveldocs_spark.schemas import TRANSCRIPTS_SCHEMA
+
+        pdf, _, store = self._store_with(spark, tmp_path, "empty_in")
+        empty = spark.createDataFrame([], TRANSCRIPTS_SCHEMA)
+        assert resume_filter(empty, store, spark).count() == 0
+        res = run_extraction(spark, empty, store=store, num_partitions=4)
+        assert res["new_rows"] == 0
+        assert res["snapshot_id"] is None
+        assert store.snapshots() == ["snap-000001"]
+        assert store.results(spark).count() == len(pdf)
+
+    def test_resume_after_every_key_deleted(self, spark, tmp_path):
+        """After delete() of every key the only live snapshot is a
+        zero-row compacted one: resume returns every input key and the
+        next run re-extracts all of them."""
+        from unraveldocs_spark.checkpoint import resume_filter
+
+        pdf, sdf, store = self._store_with(spark, tmp_path, "all_deleted")
+        store.delete(store.completed_keys(spark), spark)
+        assert store._live_snapshots() == ["snap-000002"]
+        assert store.results(spark).count() == 0
+
+        keys = set(zip(pdf.conv_id, pdf.turn_idx))
+        todo = resume_filter(sdf, store, spark)
+        assert {(r.conv_id, r.turn_idx) for r in
+                todo.select("conv_id", "turn_idx").collect()} == keys
+        res = run_extraction(spark, sdf, store=store, num_partitions=4)
+        assert res["new_rows"] == len(keys)
+        assert store.results(spark).count() == len(keys)
+
+
+class TestArrowStageNulls:
+    def test_null_text_and_tool_match_oracle(self, spark):
+        """NULL text and NULL tool arrive in the Arrow stage as None and
+        give exactly oracle.extract_turn(role, None, None)."""
+        import datetime
+
+        from unraveldocs_spark.schemas import TRANSCRIPTS_SCHEMA
+
+        ts = datetime.datetime(2026, 1, 1)
+        roles = ["user", "assistant", "tool", "system"]
+        rows = [("c-null", i, role, None, None, ts) for i, role in enumerate(roles)]
+        got = {
+            r.turn_idx: r.asDict(recursive=True)
+            for r in extract_stage(
+                spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
+            ).collect()
+        }
+        assert sorted(got) == list(range(len(roles)))
+        for i, role in enumerate(roles):
+            exp = O.oracle_rows([("c-null", i, role, None, None)])[0]
+            assert {k: got[i][k] for k in exp} == exp, role
+            assert got[i]["edited_content"] is None
+            assert got[i]["edited_by"] is None
+
+
 class TestTwoPhaseResume:
+    """Resume answers on partly done stores and under input drift."""
+
     def test_complete_convs_pruned_then_keys(self, spark, tmp_path):
-        """Conversation 0 fully done, conversation 1 half done: the
-        two-phase resume must return exactly the missing keys."""
+        """Conversation 0 fully done, conversation 1 half done: resume
+        must return exactly the missing keys."""
         from pyspark.sql import functions as F
 
         from unraveldocs_spark.checkpoint import resume_filter
@@ -266,20 +364,11 @@ class TestTwoPhaseResume:
         }
         assert got == expected
 
-        # both resume variants agree
-        got1 = {
-            (r.conv_id, r.turn_idx)
-            for r in resume_filter(sdf, store, spark, two_phase=False)
-            .select("conv_id", "turn_idx")
-            .collect()
-        }
-        assert got1 == expected
-
     def test_net_zero_drift_not_skipped(self, spark, tmp_path):
         """Input drift with equal counts (one turn added, one removed since
-        the snapshot) must NOT pass the conversation-complete check: the
-        new turn has to come back from resume (ADVICE r1: compare key
-        sets via semi-join, not raw counts)."""
+        the snapshot) must not hide the new turn: it has to come back
+        from resume (ADVICE r1: a per-conversation count comparison would
+        skip it forever)."""
         from pyspark.sql import functions as F
 
         from unraveldocs_spark.checkpoint import resume_filter
@@ -303,23 +392,26 @@ class TestTwoPhaseResume:
             sdf.filter((F.col("conv_id") == conv) & (F.col("turn_idx") == 1))
             .withColumn("turn_idx", F.lit(n_turns))
         )
-        for two_phase in (True, False):
-            got = {
-                (r.conv_id, r.turn_idx)
-                for r in resume_filter(drifted, store, spark, two_phase=two_phase)
-                .select("conv_id", "turn_idx")
-                .collect()
-            }
-            # the appended turn must be processed; conversations 0/2 were
-            # never extracted so every one of their turns remains
-            expected = {
-                (c, t) for c, t in zip(pdf.conv_id, pdf.turn_idx) if c != conv
-            } | {(conv, n_turns)}
-            assert got == expected, f"two_phase={two_phase}"
+        got = {
+            (r.conv_id, r.turn_idx)
+            for r in resume_filter(drifted, store, spark)
+            .select("conv_id", "turn_idx")
+            .collect()
+        }
+        # the appended turn must be processed; conversations 0/2 were
+        # never extracted so every one of their turns remains
+        expected = {
+            (c, t) for c, t in zip(pdf.conv_id, pdf.turn_idx) if c != conv
+        } | {(conv, n_turns)}
+        assert got == expected
 
     def test_plan_has_conv_prune_before_key_anti(self, spark, tmp_path):
+        """Against a store holding a snapshot, resume plans a key-level
+        anti-join."""
         import io
         from contextlib import redirect_stdout
+
+        from pyspark.sql import functions as F
 
         from unraveldocs_spark.checkpoint import resume_filter
         from unraveldocs_spark.schemas import TRANSCRIPTS_SCHEMA
@@ -328,11 +420,15 @@ class TestTwoPhaseResume:
                                    include_oversize=False)
         sdf = spark.createDataFrame(pdf, schema=TRANSCRIPTS_SCHEMA)
         store = DirCheckpointStore(str(tmp_path / "tp2"))
+        run_extraction(
+            spark, sdf.filter(F.col("conv_id") == G.conv_name(0)),
+            store=store, num_partitions=4,
+        )
         buf = io.StringIO()
         with redirect_stdout(buf):
             resume_filter(sdf, store, spark).explain("simple")
         plan = buf.getvalue()
-        assert plan.count("LeftAnti") >= 2  # conv-level prune + key-level
+        assert plan.count("LeftAnti") >= 1
 
 
 class TestSnapshotAtomicity:

@@ -190,8 +190,10 @@ class TestExtractionPlan:
         t = transcripts_spark(spark, 4, hot_factor=2, include_oversize=False)
         staged = extract_stage(salted_repartition(t, 8))
         plan = plan_of(staged, "simple")
-        # one Arrow-batched python stage, partitioned by (conv_id, salt)
-        assert "MapInPandas" in plan
+        # one Arrow-in/Arrow-out python stage, partitioned by (conv_id,
+        # salt) — never row-at-a-time Python
+        assert "MapInArrow" in plan
+        assert "BatchEvalPython" not in plan
         assert "hashpartitioning(conv_id" in plan
         assert "pmod(hash(turn_idx" in plan
         # stable order restored within partitions
@@ -212,14 +214,67 @@ class TestExtractionPlan:
 
 
 class TestResumePlan:
+    @staticmethod
+    def _parquet_input(spark, tmp_path):
+        from unraveldocs_spark.generator import transcripts_spark
+        from unraveldocs_spark.schemas import TRANSCRIPTS_SCHEMA
+
+        path = str(tmp_path / "input")
+        transcripts_spark(spark, 4, hot_factor=2, include_oversize=False).write.parquet(path)
+        return spark.read.schema(TRANSCRIPTS_SCHEMA).parquet(path)
+
+    @staticmethod
+    def _warm_store(spark, t, tmp_path):
+        """A store holding one snapshot: conversation 0 extracted."""
+        from unraveldocs_spark.checkpoint import DirCheckpointStore
+        from unraveldocs_spark.generator import conv_name
+        from unraveldocs_spark.pipeline import run_extraction
+
+        store = DirCheckpointStore(str(tmp_path / "ckpt"))
+        run_extraction(
+            spark, t.filter(F.col("conv_id") == conv_name(0)), store=store,
+            num_partitions=4,
+        )
+        return store
+
     def test_resume_is_anti_join(self, spark, tmp_path):
-        from unraveldocs_spark.checkpoint import DirCheckpointStore, resume_filter
+        from unraveldocs_spark.checkpoint import resume_filter
         from unraveldocs_spark.generator import transcripts_spark
 
         t = transcripts_spark(spark, 4, hot_factor=2, include_oversize=False)
-        store = DirCheckpointStore(str(tmp_path / "ckpt"))
+        store = self._warm_store(spark, t, tmp_path)
         plan = plan_of(resume_filter(t, store, spark), "simple")
         assert "LeftAnti" in plan
+
+    def test_warm_resume_one_anti_join_one_input_scan(self, spark, tmp_path):
+        """Against a non-empty store resume is one key-level anti-join
+        reading the input once: two FileScans in all, the input's (every
+        column) and the store's (the keys)."""
+        from unraveldocs_spark.checkpoint import resume_filter
+
+        t = self._parquet_input(spark, tmp_path)
+        store = self._warm_store(spark, t, tmp_path)
+        plan = plan_of(resume_filter(t, store, spark), "simple")
+        assert plan.count("LeftAnti") == 1
+        scans = [l for l in plan.splitlines() if "FileScan" in l]
+        assert len(scans) == 2, plan
+        assert sum("role" in l for l in scans) == 1, plan
+
+    def test_cold_run_plan_has_no_join_and_one_exchange(self, spark, tmp_path):
+        """Against an empty store the resume subtree folds away in the
+        optimizer: run_extraction stages scan -> salted Exchange -> sort
+        -> Arrow stage, with no Join and exactly one Exchange."""
+        from unraveldocs_spark.checkpoint import DirCheckpointStore
+        from unraveldocs_spark.pipeline import run_extraction
+
+        t = self._parquet_input(spark, tmp_path)
+        store = DirCheckpointStore(str(tmp_path / "ckpt"))
+        staged = run_extraction(
+            spark, t, store=store, num_partitions=8, checkpoint=False
+        )["extractions"]
+        plan = plan_of(staged, "simple")
+        assert "Join" not in plan, plan
+        assert plan.count("Exchange") == 1, plan
 
 
 class TestRound2Plans:
@@ -258,8 +313,8 @@ class TestRound2Plans:
     def test_bucketed_resume_join_is_shuffle_free(self, spark):
         """When input and completed keys are both bucketed by conv_id
         (Iceberg: PARTITIONED BY bucket(N, conv_id) + storage-partitioned
-        joins), the conversation-grain resume join needs NO Exchange —
-        the property that makes phase-1 resume cheap at 10^12 turns."""
+        joins), a conversation-grain join between them needs NO Exchange —
+        the co-location property ``write_bucketed`` documents."""
         from unraveldocs_spark.checkpoint import write_bucketed
         from unraveldocs_spark.generator import transcripts_spark
 

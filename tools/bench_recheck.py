@@ -133,17 +133,22 @@ def _compact_verdicts(detail: dict) -> dict[str, str]:
                 return (i, name)
         return (len(_VERDICT_PRIORITY), name)
 
+    def more(n):
+        return {"_more": f"{n} in BENCH/recheck json"} if n else {}
+
+    # admit in priority order and stop at the first entry that does not
+    # fit, so a lower-priority verdict never displaces a graver one; each
+    # check counts the _more entry the dict would end with if admission
+    # stopped right after this entry, so the final dict fits the budget
+    ranked = sorted(detail.items(), key=rank)
     compact: dict[str, str] = {}
-    dropped = 0
-    for name, r in sorted(detail.items(), key=rank):
+    for i, (name, r) in enumerate(ranked):
         val = f"x{r['median']}" if name == "_window_inflation" else r["verdict"]
-        if len(json.dumps({**compact, name: val})) > INLINE_BUDGET_CHARS:
-            dropped += 1
-            continue
+        trial = {**compact, name: val, **more(len(ranked) - i - 1)}
+        if len(json.dumps(trial)) > INLINE_BUDGET_CHARS:
+            break
         compact[name] = val
-    if dropped:
-        compact["_more"] = f"{dropped} in BENCH/recheck json"
-    return compact
+    return {**compact, **more(len(ranked) - len(compact))}
 
 
 def _write_detail(detail: dict, repo: str | None = None) -> None:

@@ -18,18 +18,22 @@ protocol here has two interchangeable stores:
   change, not a code change.)
 
 Resume (the idempotency primitive — ProcessOcr.java:71-74,
-ExtractTextFromDocumentImpl.java:50-54) is a LEFT ANTI join of the input
-against the committed keys:
+ExtractTextFromDocumentImpl.java:50-54) is ONE key-level LEFT ANTI join of
+the input against the committed keys:
 
     input.join(done, ["conv_id", "turn_idx"], "left_anti")
 
+It is exact under input drift by construction (a turn is skipped only if
+its own key is committed), scans the input once and shuffles the payload
+once.  A store with no live snapshot returns an empty relation the
+optimizer can see (``where(false)`` over the declared schema), so on a
+cold run Catalyst's PropagateEmptyRelation removes the whole resume
+subtree: the plan is scan -> salted Exchange -> sort -> Arrow stage.
+
 Scale note (100 TB / 10^12 turns): the anti-join shuffles both sides on
-(conv_id, turn_idx).  Both the input table and the checkpoint output
-should be written bucketed/partitioned by conv_id so the join co-locates;
-additionally the lineage table records which conversations are fully
-complete, letting a resume first drop whole conversations via a broadcast
-anti-join on conv_id (cheap) before the key-level anti-join handles the
-partially-complete remainder.
+(conv_id, turn_idx).  Tables written bucketed on the join keys with equal
+bucket counts (``write_bucketed``) join bucket-locally, without that
+shuffle.
 """
 
 from __future__ import annotations
@@ -38,11 +42,19 @@ import json
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .schemas import EXTRACTIONS_SCHEMA, LINEAGE_SCHEMA
 
 KEYS = ["conv_id", "turn_idx"]
+
+
+def _empty(spark: SparkSession, schema) -> DataFrame:
+    """A zero-row frame Catalyst can prove empty.  A bare
+    ``createDataFrame([], schema)`` plans as an opaque RDD scan, so joins
+    against it keep their full shuffles; the false filter folds to an
+    empty LocalRelation that PropagateEmptyRelation then propagates."""
+    return spark.createDataFrame([], schema).where(F.lit(False))
 
 
 class DirCheckpointStore:
@@ -209,7 +221,7 @@ class DirCheckpointStore:
             for s in self._live_snapshots()
         ]
         if not paths:
-            return spark.createDataFrame([], self.results_schema)
+            return _empty(spark, self.results_schema)
         return spark.read.schema(self.results_schema).parquet(*paths)
 
     def lineage(self, spark: SparkSession) -> DataFrame:
@@ -219,7 +231,7 @@ class DirCheckpointStore:
             if os.path.exists(os.path.join(self.snap_dir, s, "lineage"))
         ]
         if not paths:
-            return spark.createDataFrame([], self.lineage_schema)
+            return _empty(spark, self.lineage_schema)
         return spark.read.schema(self.lineage_schema).parquet(*paths)
 
     def completed_keys(self, spark: SparkSession) -> DataFrame:
@@ -279,8 +291,6 @@ class DirCheckpointStore:
         Iceberg changelog read (``table_changes``) the production path
         gets for free.  Both snapshots must still exist (run before
         expire_snapshots)."""
-        from pyspark.sql import functions as F
-
         def keys_at(s):
             # cumulative state AS OF s: latest compacted snapshot <= s
             # (full state) plus every append after it up to s
@@ -452,14 +462,14 @@ def write_bucketed(df: DataFrame, table: str, buckets: int = 16,
                    by: str = "conv_id") -> None:
     """Write a table bucketed by ``by`` so resume joins co-locate.
 
-    At 10^12 turns the conv-grain prune (phase 1 of resume_filter) joins
-    input and completed keys on conv_id; when both sides are bucketed by
-    conv_id with matching bucket counts, that join runs shuffle-FREE
-    (bucket-local sort-merge) — the plan-tested property.  The Iceberg
-    production path is the same idea as a partition transform:
-    ``PARTITIONED BY (bucket(N, conv_id))`` with storage-partitioned
-    joins; this helper is the builtin-catalog equivalent for the
-    sandbox."""
+    At 10^12 turns, a join keyed on ``by`` between two tables bucketed
+    by ``by`` with matching bucket counts runs shuffle-FREE (bucket-local
+    sort-merge) — the plan-tested property, on conv_id.  resume_filter's
+    anti-join is keyed on (conv_id, turn_idx), so it co-locates only
+    when the bucketing covers both keys.  The Iceberg production path is
+    the same idea as a partition transform: ``PARTITIONED BY (bucket(N,
+    conv_id))`` with storage-partitioned joins; this helper is the
+    builtin-catalog equivalent for the sandbox."""
     (
         df.write.mode("overwrite")
         .bucketBy(buckets, by)
@@ -469,46 +479,13 @@ def write_bucketed(df: DataFrame, table: str, buckets: int = 16,
     )
 
 
-def resume_filter(
-    transcripts: DataFrame, store, spark: SparkSession, two_phase: bool = True
-) -> DataFrame:
+def resume_filter(transcripts: DataFrame, store, spark: SparkSession) -> DataFrame:
     """Drop already-extracted turns: the left-anti resume join
     (SURVEY.md §2.2 'idempotency predicate').
 
-    Two-phase at scale: first drop whole conversations whose completed
-    count matches the input count (an anti-join on conv_id — small keys,
-    broadcastable when few convs remain incomplete), then key-level
-    anti-join only against the partially-complete remainder.  At 10^12
-    turns this shrinks the right side of the expensive (conv_id, turn_idx)
-    anti-join from every completed key to only the keys of interrupted
-    conversations.
-
-    A conversation counts as complete only when every INPUT key has a
-    matching done key (semi-join before the count, not a raw done count):
-    raw counts would let net-zero input drift — one turn added, another
-    removed — pass the equality and silently skip the new turn forever.
-    With the semi-join, any unprocessed input key makes matched < total
-    and the conversation falls through to the key-level anti-join."""
-    from pyspark.sql import functions as F
-
-    done = store.completed_keys(spark)
-    if not two_phase:
-        return transcripts.join(done, KEYS, "left_anti")
-
-    input_keys = transcripts.select(*KEYS)
-    done_counts = (
-        done.join(input_keys, KEYS, "left_semi")
-        .groupBy("conv_id")
-        .agg(F.count(F.lit(1)).alias("_done_n"))
-    )
-    input_counts = transcripts.groupBy("conv_id").agg(
-        F.count(F.lit(1)).alias("_total_n")
-    )
-    complete_convs = (
-        done_counts.join(input_counts, "conv_id")
-        .filter(F.col("_done_n") == F.col("_total_n"))
-        .select("conv_id")
-    )
-    remaining = transcripts.join(complete_convs, "conv_id", "left_anti")
-    partial_done = done.join(complete_convs, "conv_id", "left_anti")
-    return remaining.join(partial_done, KEYS, "left_anti")
+    One key-level anti-join on (conv_id, turn_idx): a turn is skipped
+    exactly when its own key is committed, so input drift (turns added or
+    removed since the snapshot) can never hide an unprocessed turn.
+    Against an empty store the join folds away in the optimizer and the
+    input passes through untouched."""
+    return transcripts.join(store.completed_keys(spark), KEYS, "left_anti")

@@ -3,7 +3,7 @@
 The authoritative extraction correctness gate is pytest (exact per-turn
 equality vs the oracle on synthetic transcripts, FIXTURES.md).  These
 queries additionally push the *driver's* tables through the real
-``mapInPandas`` extraction stage so the DuckDB oracle can verify the full
+``mapInArrow`` extraction stage so the DuckDB oracle can verify the full
 distributed dispatch end-to-end: a transcripts table is derived
 deterministically from ``documents`` (plain payloads only, so every rule
 the dispatch picks is SQL-expressible)."""

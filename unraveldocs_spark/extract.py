@@ -1,13 +1,15 @@
-"""The vectorized extraction stage — one Arrow-batched ``mapInPandas``
+"""The vectorized extraction stage — one Arrow-batched ``mapInArrow``
 implementing the payload-kind dispatch (the column-level analog of
 OcrProviderFactory, SRC/ocrprocessing/provider/OcrProviderFactory.java:19-188)
 with row-level error capture (ProcessOcr.java:129-139: a poisoned payload
 becomes a FAILED row, never a failed task).
 
 Data crosses the JVM<->Python boundary once, in Arrow batches
-(spark.sql.execution.arrow.maxRecordsPerBatch); all row work happens in
-CPython on already-materialized batch columns — no per-row Python UDF
-round trips (BASELINE.json input_hint).
+(spark.sql.execution.arrow.maxRecordsPerBatch), in and out without a
+pandas frame: the input columns are read as Python lists, all row work
+happens in CPython, and the output is built column by column with
+``pa.array`` against the Arrow form of ``EXTRACTIONS_SCHEMA`` — no per-row
+Python UDF round trips (BASELINE.json input_hint).
 """
 
 from __future__ import annotations
@@ -15,69 +17,59 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructField, StructType, TimestampType
 
 from .oracle import extract_turn
 from .schemas import EXTRACTIONS_SCHEMA
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        carry_ts = "ts" in pdf.columns
-        conv_ids = pdf["conv_id"].to_numpy()
-        turn_idxs = pdf["turn_idx"].to_numpy()
-        roles = pdf["role"].to_numpy()
-        texts = pdf["text"].to_numpy()
-        tools = pdf["tool"].to_numpy()
+_TS_SCHEMA = StructType(
+    EXTRACTIONS_SCHEMA.fields + [StructField("ts", TimestampType(), False)]
+)
+_ARROW_OUT = to_arrow_schema(EXTRACTIONS_SCHEMA)
+_ARROW_OUT_TS = to_arrow_schema(_TS_SCHEMA)
 
-        n = len(pdf)
-        extracted = [None] * n
-        spans = [None] * n
-        status = [None] * n
-        error = [None] * n
-        fmt = [None] * n
-        rule = [None] * n
-        n_chars = [0] * n
-        n_words = [0] * n
 
-        for i in range(n):
-            text = texts[i]
-            if text is not None and not isinstance(text, str):
-                # pandas may surface NULL as NaN
-                text = None if text != text else str(text)
-            tool = tools[i]
-            if tool is not None and not isinstance(tool, str):
-                tool = None if tool != tool else str(tool)
-            r = extract_turn(roles[i], tool, text)
-            extracted[i] = r.extracted_text
-            spans[i] = [
-                {"start": s, "end": e, "kind": k} for (s, e, k) in r.spans
-            ]
-            status[i] = r.status
-            error[i] = r.error_message
-            fmt[i] = r.content_format
-            rule[i] = r.rule
-            n_chars[i] = r.n_chars
-            n_words[i] = r.n_words
+def _extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    for batch in batches:
+        carry_ts = "ts" in batch.schema.names
+        out_schema = _ARROW_OUT_TS if carry_ts else _ARROW_OUT
+        # Arrow NULL surfaces as None in to_pylist(), which is what
+        # extract_turn expects for a missing text or tool
+        results = [
+            extract_turn(role, tool, text)
+            for role, text, tool in zip(
+                batch.column("role").to_pylist(),
+                batch.column("text").to_pylist(),
+                batch.column("tool").to_pylist(),
+            )
+        ]
 
-        out = {
-            "conv_id": conv_ids,
-            "turn_idx": turn_idxs,
-            "extracted_text": extracted,
-            "spans": spans,
-            "status": status,
-            "error_message": error,
-            "content_format": fmt,
-            "rule": rule,
-            "n_chars": pd.array(n_chars, dtype="int32"),
-            "n_words": pd.array(n_words, dtype="int32"),
-            # edit lifecycle fields: always null at extraction time
-            # (populated only by edits.apply_edits + store.upsert)
-            "edited_content": [None] * n,
-            "edited_by": [None] * n,
-        }
+        def column(name, values):
+            return pa.array(values, out_schema.field(name).type)
+
+        # edit lifecycle fields: always null at extraction time
+        # (populated only by edits.apply_edits + store.upsert)
+        unedited = pa.nulls(batch.num_rows, pa.string())
+        arrays = [
+            batch.column("conv_id"),
+            batch.column("turn_idx"),
+            column("extracted_text", [r.extracted_text for r in results]),
+            column("spans", [r.spans for r in results]),
+            column("status", [r.status for r in results]),
+            column("error_message", [r.error_message for r in results]),
+            column("content_format", [r.content_format for r in results]),
+            column("rule", [r.rule for r in results]),
+            column("n_chars", [r.n_chars for r in results]),
+            column("n_words", [r.n_words for r in results]),
+            unedited,
+            unedited,
+        ]
         if carry_ts:
-            out["ts"] = pdf["ts"].to_numpy()
-        yield pd.DataFrame(out)
+            arrays.append(batch.column("ts"))
+        yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
 
 
 def encrypt_stage(transcripts_df):
@@ -129,11 +121,9 @@ def extract_stage(transcripts_df, carry_ts: bool = False):
     cols = ["conv_id", "turn_idx", "role", "text", "tool"]
     schema = EXTRACTIONS_SCHEMA
     if carry_ts:
-        from pyspark.sql.types import StructField, StructType, TimestampType
-
         cols.append("ts")
-        schema = StructType(schema.fields + [StructField("ts", TimestampType(), False)])
-    return transcripts_df.select(*cols).mapInPandas(_extract_batches, schema=schema)
+        schema = _TS_SCHEMA
+    return transcripts_df.select(*cols).mapInArrow(_extract_batches, schema=schema)
 
 
 def vision_metrics_stage(transcripts_df):

@@ -5,7 +5,7 @@ bulk upload → Kafka → OCR data path, SURVEY.md §3.2):
       -> resume anti-join vs checkpoint (idempotency, ProcessOcr.java:71-74)
       -> salted repartition on (conv_id, salt(turn_idx))   [skew defusal]
       -> sortWithinPartitions(conv_id, turn_idx)           [stable order]
-      -> mapInPandas extraction (Arrow batches)
+      -> mapInArrow extraction (Arrow batches in and out)
       -> append results + per-partition lineage in ONE snapshot
       -> conversation rollup (ProcessOcr.java:185-217)
 
@@ -143,13 +143,14 @@ def run_extraction(
     transcripts: DataFrame,
     store=None,
     num_partitions: int | None = None,
-    salt: int = DEFAULT_SALT,
+    salt: int | None = None,
     checkpoint: bool = True,
 ) -> dict:
     """Run the pipeline once.  Returns a dict with the snapshot id, run id,
     rollup DataFrame and basic counters.  With a ``store``, previously
     completed (conv_id, turn_idx) keys are skipped (resume) and the new
-    results + lineage are committed as one snapshot."""
+    results + lineage are committed as one snapshot.  ``salt`` defaults to
+    :func:`salted_repartition`'s own default."""
     from .checkpoint import resume_filter
 
     run_id = uuid.uuid4().hex[:12]
